@@ -76,7 +76,8 @@ object Graph {
     // — persist(repartition(parallelism, src)) so the InMemoryRelation
     // REPORTS hashpartitioning + SHUFFLE_HASH hints so the join stays
     // sort-free — measured WORSE in every regime on this host and was
-    // reverted (numbers in OPTIMIZATION_r14.md, plans in plans/r14/):
+    // reverted (the numbers are the ones below; before/after plans are in
+    // plans/r14/q_pagerank_*.txt, q_ppr_*.txt and q_hits_*.txt):
     //   · sf0.1, default broadcast threshold: 6.3 vs 5.8 s (hints
     //     suppress the planner's broadcast: forced-SHJ spellings hit
     //     10–22 s, and persisting the live lineage 36–88 s driver-side);

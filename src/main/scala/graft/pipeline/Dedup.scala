@@ -138,41 +138,35 @@ object Dedup {
     * MinHash verify path; one formula, one implementation). */
   private[pipeline] def jaccardOfShingles(sh: DataFrame, theta: Double,
                                           candidates: Option[DataFrame] = None): DataFrame = {
-    // Candidate-path pre-filter history. Round 13 tried the guide-§3.2
-    // reduction as a candidate-doc SEMI-JOIN with its own checkpoint
-    // barriers and measured it 2.5× WORSE (4.6 vs 1.8 s, q_dedup_minhash
-    // at sf0.1) — the barriers beat the saved exchanges. Round 14
-    // implements the technique AS WRITTEN instead: a driver-built Bloom
-    // over the candidate doc ids, applied MAP-SIDE to the shingle table
-    // (a codegen'd getbit chain — no join node, no extra exchange, no
-    // barrier beyond the candidate materialization the collect needs
-    // anyway), so the sizes aggregate and both verify-join probes shuffle
-    // only candidate-doc shingle rows instead of the whole corpus's.
-    // False positives only add rows the inner joins drop; a Bloom has no
-    // false negatives and keeps EVERY row of a true candidate doc, so
-    // the per-doc shingle counts stay exact — output unchanged.
-    val (inter, sizes) = candidates match {
+    // Candidate-path pre-filter history — both rejected, plain joins kept.
+    // Round 13 reduced the shingle table to candidate docs with a SEMI-JOIN
+    // behind checkpoint barriers: 4.6 vs 1.8 s (q_dedup_minhash, sf0.1,
+    // interleaved with a control row); lazy, it re-ran the banded candidate
+    // subtree per reference (11 s+). Round 14 applied a driver-built Bloom
+    // over the candidate doc ids map-side instead: it collected every
+    // candidate id to the driver with no bound, added jobs and task-result
+    // bytes, slowed eight dedup-family queries (q_dedup_incremental_minhash
+    // 3.2x) and read doc_id as a long, so an int doc_id threw. The one-job
+    // spelling below already shares the doc_id-keyed shingle exchanges
+    // through ReuseExchange (the i-join and the sizes aggregate partition
+    // the same subtree identically). A prefilter that returns must be
+    // built distributed (bloom_filter_agg + broadcast) and gated on the
+    // candidate count; at 100 TB route the verify through
+    // minHashIncremental's store probe, whose shuffle is already
+    // proportional to batch + candidates.
+    val sizes = shingleSizes(sh)
+    val inter = candidates match {
       case None =>
-        val i0 = sh.as("a")
+        sh.as("a")
           .join(sh.as("b"), col("a.sh_hash") === col("b.sh_hash") &&
             col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
           .agg(count(lit(1)).as("c"))
-        (i0, shingleSizes(sh))
-      case Some(cands0) =>
-        // materialized: consumed by the Bloom-build collect AND the join
-        // (lazy, the banded candidate subtree would execute twice)
-        val cands = cands0.localCheckpoint()
-        val ids = cands
-          .select(explode(array(col("i"), col("j"))).as("d")).distinct()
-          .collect().map(r => Bloom.mix64(r.getLong(0)))
-        val bits = Bloom.build(ids)
-        val shF = sh.where(Bloom.mightContain(bits, Bloom.mix64(col("doc_id"))))
-        val i0 = cands
-          .join(shF.select(col("doc_id").as("i"), col("sh_hash")), "i")
-          .join(shF.select(col("doc_id").as("j"), col("sh_hash")), Seq("j", "sh_hash"))
+      case Some(cands) =>
+        cands
+          .join(sh.select(col("doc_id").as("i"), col("sh_hash")), "i")
+          .join(sh.select(col("doc_id").as("j"), col("sh_hash")), Seq("j", "sh_hash"))
           .groupBy("i", "j").agg(count(lit(1)).as("c"))
-        (i0, shingleSizes(shF))
     }
     inter
       .join(sizes.select(col("doc_id").as("i"), col("n_sh").as("ni")), "i")

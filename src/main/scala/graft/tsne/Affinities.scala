@@ -83,48 +83,98 @@ object Affinities {
       }
   }
 
-  // ---------------- O11: joint distribution ------------------------------
+  // ---------------- O11 + O12: symmetric sparse rows ---------------------
 
-  /** Symmetrize + normalize (ref `TsneHelpers.scala:182-196`):
-    * p_ij = (p_{j|i} + p_{i|j}) / Σ. Expressed relationally — union with the
-    * transposed copy, hash-aggregate on (i, j) (partial map-side combine for
-    * free), then divide by the global sum via a 1-row cross join.
-    *
-    * The symmetrized aggregate is persisted before the global sum is
-    * derived from it: the normalization needs two passes over `sym` (one to
-    * reduce it to Σ, one to divide), and without a cache Spark re-executes
-    * the whole upstream — including the O(N²) kNN — once per pass
-    * (this was 73% of the round-1 bench, VERDICT r1 "what's wrong" #1).
-    * The cache holds N·k skinny rows, safely evictable (MEMORY_AND_DISK).
+  /** Symmetrize and assemble sparse rows in ONE shuffle
+    * (ref `TsneHelpers.scala:182-196` and the row assembly at
+    * `Tsne.scala:119-129`): every conditional p_{j|i} is sent to row i and,
+    * transposed, to row j; a single `groupByKey(i)` then sorts each row by
+    * j and sums the contributions per column, p_{j|i} + p_{i|j} (at most
+    * two for kNN input; ties on j are summed in ascending value order, so
+    * the result does not depend on shuffle fetch order). The rows are NOT
+    * normalized: P = rows / ΣP, with ΣP from [[rowStats]].
     *
     * (The reference's `max(_, Double.MinValue)` clamps at `:191,194` are
     * no-ops — scala `Double.MinValue` is −1.8e308 — so plain division is
     * faithful; SURVEY.md §2 O11.) */
+  def symmetricRows(p: Dataset[Neighbor]): Dataset[AffinityRow] = {
+    val spark = p.sparkSession
+    import spark.implicits._
+    p.flatMap(n => Iterator(n, Neighbor(n.j, n.i, n.dist)))
+      .groupByKey(_.i)
+      .mapGroups { (i, rows) =>
+        val sorted = rows.toArray.sortBy(n => (n.j, n.dist))
+        val js = new Array[Long](sorted.length)
+        val ps = new Array[Double](sorted.length)
+        var m = -1
+        var k = 0
+        while (k < sorted.length) {
+          val n = sorted(k)
+          if (m >= 0 && js(m) == n.j) ps(m) += n.dist
+          else { m += 1; js(m) = n.j; ps(m) = n.dist }
+          k += 1
+        }
+        AffinityRow(i, js.take(m + 1), ps.take(m + 1))
+      }
+  }
+
+  /** (|P|, rows, ΣP) of un-normalized rows in one job: per-partition
+    * partials folded on the driver. |P| and the row count route the
+    * optimizer; ΣP is the normalizer, summed exactly ([[exactSum]]). */
+  def rowStats(rows: Dataset[AffinityRow]): (Long, Long, Double) = {
+    val (entries, n, total) = rows.rdd.mapPartitions { it =>
+      var entries = 0L
+      var n = 0L
+      var total = java.math.BigDecimal.ZERO
+      it.foreach { r => entries += r.js.length; n += 1; total = exactSum(total, r.ps) }
+      Iterator((entries, n, total))
+    }.collect().foldLeft((0L, 0L, java.math.BigDecimal.ZERO)) {
+      case ((e, n, t), (e1, n1, t1)) => (e + e1, n + n1, t.add(t1))
+    }
+    (entries, n, total.doubleValue)
+  }
+
+  /** `acc` + Σ ps with no rounding: every double enters as its exact
+    * decimal expansion, and the caller rounds the total once. ΣP — and so
+    * every bit of P — is then the same however the rows are partitioned
+    * or ordered; a floating-point running sum is not, and the optimizer
+    * amplifies a last-bit difference in P into a different embedding. */
+  private[tsne] def exactSum(acc: java.math.BigDecimal, ps: Array[Double]): java.math.BigDecimal = {
+    var s = acc
+    var k = 0
+    while (k < ps.length) { s = s.add(new java.math.BigDecimal(ps(k))); k += 1 }
+    s
+  }
+
+  /** One row of P = rows / ΣP — the only place P is normalized. */
+  def normalize(row: AffinityRow, total: Double): AffinityRow =
+    AffinityRow(row.id, row.js, row.ps.map(_ / total))
+
+  /** O11 in COO form, p_ij = (p_{j|i} + p_{i|j}) / ΣP: the normalized
+    * [[symmetricRows]], one entry per (i, j). */
   def jointDistribution(p: Dataset[Neighbor]): Dataset[Neighbor] =
     jointDistributionWithRelease(p)._1
 
-  /** [[jointDistribution]] plus a release handle for the internal cache:
-    * call it once the result has been fully consumed (the pipeline does so
-    * after `optimize` returns). Without releasing, the cached symmetrized
-    * aggregate lives until the session ends — harmless for one-shot jobs,
-    * a leak for long-lived sessions. */
+  /** [[jointDistribution]] plus a release handle for its cached rows. ΣP
+    * needs one pass over the rows before the divide, so the rows are
+    * persisted and ΣP is taken eagerly with [[rowStats]] (one job); the
+    * result then reads the cache. Call the handle once the result has
+    * been consumed. (Measured on a 600-point, k = 30 input, `local[4]`: a
+    * lazy 1-row cross join of ΣP over the same rows, with the row exchange
+    * reused and no cache, collected in 529 ms against 372 ms for this.) */
   def jointDistributionWithRelease(p: Dataset[Neighbor]): (Dataset[Neighbor], () => Unit) = {
     val spark = p.sparkSession
     import spark.implicits._
-    val df = p.toDF()
-    val sym = df.union(df.select(col("j").as("i"), col("i").as("j"), col("dist")))
-      .groupBy("i", "j").agg(sum("dist").as("dist"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = sym.agg(sum("dist").as("total"))
-    val out = sym.crossJoin(total)
-      .select(col("i"), col("j"), (col("dist") / col("total")).as("dist"))
-      .as[Neighbor]
-    (out, () => { sym.unpersist(); () })
+    val rows = symmetricRows(p).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (_, _, total) = rowStats(rows)
+    val joint = rows.flatMap { r =>
+      val n = normalize(r, total)
+      n.js.indices.iterator.map(k => Neighbor(n.id, n.js(k), n.ps(k)))
+    }
+    (joint, () => { rows.unpersist(); () })
   }
 
-  // ---------------- O12: COO → sparse-row assembly -----------------------
-
-  /** Group the joint distribution by row id into parallel (j, p) arrays,
+  /** Group a COO joint distribution by row id into parallel (j, p) arrays,
     * sorted by j (ref `Tsne.scala:119-129` builds a Breeze SparseVector of
     * fake capacity n²; only the active entries matter). One hash shuffle. */
   def toAffinityRows(joint: Dataset[Neighbor]): Dataset[AffinityRow] = {
@@ -136,16 +186,4 @@ object Affinities {
         AffinityRow(i, sorted.map(_.j), sorted.map(_.dist))
       }
   }
-
-  /** Full affinity pipeline: kNN distances → P as sparse rows, with the
-    * early-exaggeration factor applied lazily by the optimizer. Returns
-    * the release handle of the internal joint-distribution cache. */
-  def highDimAffinitiesWithRelease(knn: Dataset[Neighbor],
-                                   perplexity: Double): (Dataset[AffinityRow], () => Unit) = {
-    val (joint, release) = jointDistributionWithRelease(pairwiseAffinities(knn, perplexity))
-    (toAffinityRows(joint), release)
-  }
-
-  def highDimAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[AffinityRow] =
-    highDimAffinitiesWithRelease(knn, perplexity)._1
 }

@@ -105,7 +105,8 @@ object Optimizer {
     ).filter(_._1 > 0)
   }
 
-  /** Full optimize: picks the local or distributed path by |P|.
+  /** Full optimize over a ready, normalized P and working set: picks the
+    * local or a distributed path by |P|.
     *
     * P is persisted up front — the size probe, the path's own passes, and
     * `ws0` (whose plan contains P as a subtree, so Spark's cache manager
@@ -114,8 +115,7 @@ object Optimizer {
     * (VERDICT r1 "what's wrong" #2). */
   def optimize(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet], params: Params,
                lossAcc: Option[MapAccumulator] = None): Dataset[Point] = {
-    require(params.nComponents == 2,
-      "gradient is 2-D only, like the reference (TsneHelpers.scala:228, QuadTree.scala:156)")
+    requireTwoD(params)
     val spark = p.sparkSession
     import spark.implicits._
     val pCached = p.persist(StorageLevel.MEMORY_AND_DISK)
@@ -123,17 +123,60 @@ object Optimizer {
       // coalesce: sum(...) is null on an empty P — fail with a clear message
       val pEntries = pCached.select(coalesce(sum(size(col("js"))), lit(0L))).as[Long].head()
       require(pEntries > 0, "cannot optimize an empty affinity dataset")
-      if (pEntries <= params.maxLocalPEntries) {
-        val (points, loss) = optimizeLocal(pCached.collect(), ws0.collect(), params)
-        lossAcc.foreach(acc => loss.foreach(acc.add))
-        spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(points))
-      } else if (pCached.count() <= params.maxBroadcastStateRows) {
-        optimizeDistributed(pCached, ws0, params, lossAcc)
-      } else {
-        optimizeStateDistributed(pCached, ws0, params, lossAcc)
-      }
+      if (pEntries <= params.maxLocalPEntries)
+        localResult(spark, pCached.collect(), ws0.collect(), params, lossAcc)
+      else distributedRoute(pCached, ws0, pCached.count(), params, lossAcc)
     } finally pCached.unpersist()
   }
+
+  /** The kNN → optimizer hand-off of [[Tsne.computeEmbedding]], from the
+    * un-normalized [[Affinities.symmetricRows]]. One job over the rows
+    * ([[Affinities.rowStats]]) yields |P| for routing and ΣP for
+    * normalizing; on the local route P then reaches the driver in ONE
+    * collect, is normalized there, and the initial working set is drawn
+    * on the driver from the same [[initRow]] as [[initWorkingSet]] — no
+    * further job before the first iteration. The distributed routes
+    * normalize with a map over the cached rows and start from
+    * [[initWorkingSet]], exactly as [[optimize]] does. */
+  def optimizeSymmetric(rows: Dataset[AffinityRow], params: Params,
+                        lossAcc: Option[MapAccumulator] = None): Dataset[Point] = {
+    requireTwoD(params)
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val cached = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (entries, nRows, total) = Affinities.rowStats(cached)
+      require(entries > 0, "cannot optimize an empty affinity dataset")
+      if (entries <= params.maxLocalPEntries) {
+        val p = cached.collect().map(Affinities.normalize(_, total))
+        val ws0 = p.map(r => initRow(r.id, params.nComponents, params.seed))
+        localResult(spark, p, ws0, params, lossAcc)
+      } else {
+        val p = cached.map(Affinities.normalize(_, total))
+        distributedRoute(p, initWorkingSet(p, params.nComponents, params.seed), nRows,
+          params, lossAcc)
+      }
+    } finally cached.unpersist()
+  }
+
+  private def requireTwoD(params: Params): Unit =
+    require(params.nComponents == 2,
+      "gradient is 2-D only, like the reference (TsneHelpers.scala:228, QuadTree.scala:156)")
+
+  private def localResult(spark: org.apache.spark.sql.SparkSession, p: Array[AffinityRow],
+                          ws0: Array[WorkingSet], params: Params,
+                          lossAcc: Option[MapAccumulator]): Dataset[Point] = {
+    import spark.implicits._
+    val (points, loss) = optimizeLocal(p, ws0, params)
+    lossAcc.foreach(acc => loss.foreach(acc.add))
+    spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(points))
+  }
+
+  private def distributedRoute(p: Dataset[AffinityRow], ws0: Dataset[WorkingSet],
+                               nRows: Long, params: Params,
+                               lossAcc: Option[MapAccumulator]): Dataset[Point] =
+    if (nRows <= params.maxBroadcastStateRows) optimizeDistributed(p, ws0, params, lossAcc)
+    else optimizeStateDistributed(p, ws0, params, lossAcc)
 
   /** The phase-1 superstep dataflow of [[optimizeDistributed]] as
     * UNEXECUTED plans for `--executionPlan` (ref `Tsne.scala:89-95` dumps
@@ -191,16 +234,25 @@ object Optimizer {
 
   // ================= driver-local fast path ==============================
 
-  /** The per-point phases (BH traversals, attractive forces, updates) run
-    * data-parallel across the driver's cores — during early exaggeration
-    * the collapsed embedding defeats the replicated squared-distance BH
+  /** The whole loop in driver memory, over P as a CSR matrix whose column
+    * indices are positions in the id-sorted working set (no id lookups in
+    * the loop) and state updated in place. Each iteration is two parallel
+    * passes over the points: (1) Barnes-Hut repulsion + attraction, (2)
+    * gradient + delta-bar-delta update; on loss iterations one more pass
+    * evaluates the loss once sumQ is known. During early exaggeration the
+    * collapsed embedding defeats the replicated squared-distance BH
     * criterion (every traversal descends fully, so each superstep is
-    * effectively O(N²) node visits), and a single thread leaves the other
-    * 31 cores idle for exactly the iterations that cost the most. Every
-    * parallel phase writes only its own index; all reductions (sumQ, loss,
-    * centering means) are folded sequentially in index order afterwards,
-    * so the result is bit-identical to the sequential loop (and to the
-    * distributed path, which `OptimizerSpec` pins at 1e-9). */
+    * effectively O(N²) node visits), which is why the per-point work runs
+    * across all the driver's cores. Every parallel pass writes only its
+    * own index; all reductions (sumQ, loss, centering means) are folded
+    * sequentially in index order afterwards, so the result is
+    * bit-identical to a sequential loop (and agrees with the distributed
+    * paths, which `OptimizerSpec` pins at 1e-9).
+    *
+    * A working-set point without a P row has an empty CSR row: zero
+    * attraction, full repulsion, and it stays in the embedding — the rule
+    * every path follows. A P row whose id is not in the working set is an
+    * error. */
   def optimizeLocal(pRows0: Array[AffinityRow], ws00: Array[WorkingSet],
                     params: Params): (Array[Point], Map[Int, Double]) =
     optimizeLocalSchedule(pRows0, ws00, params, phases(params))
@@ -210,7 +262,7 @@ object Optimizer {
     * identical loop to prove the clustered quality gate is discriminating,
     * not just non-trivial. */
   private[tsne] def optimizeLocalSchedule(
-      pRows0: Array[AffinityRow], ws00: Array[WorkingSet], params: Params,
+      pRows: Array[AffinityRow], ws00: Array[WorkingSet], params: Params,
       schedule: Seq[(Int, Double, Boolean, Int)]): (Array[Point], Map[Int, Double]) = {
     val metric = Distances.byName(params.metric)
     // Canonical id order: the inputs arrive in collect() partition order,
@@ -218,19 +270,53 @@ object Optimizer {
     // (hence center-of-mass summation order) would otherwise leak that
     // ordering into the trajectory via FP noise that chaotic supersteps
     // amplify. Sorted, the whole loop is a pure function of (data, seed).
-    val pRows = pRows0.sortBy(_.id)
     val ws0 = ws00.sortBy(_.id)
     val n = ws0.length
-    val loss = scala.collection.mutable.Map.empty[Int, Double]
-
-    // id-indexed state
     val ids = ws0.map(_.id)
-    val idx = new java.util.HashMap[Long, Int](n * 2)
-    ids.zipWithIndex.foreach { case (id, k) => idx.put(id, k) }
+    val idx = ids.zipWithIndex.toMap
+    def indexOf(id: Long): Int =
+      idx.getOrElse(id, throw new IllegalArgumentException(
+        s"affinity id $id has no working-set row"))
+
+    // P as CSR over working-set positions
+    val rowOf = new Array[AffinityRow](n)
+    pRows.foreach { r =>
+      val i = indexOf(r.id)
+      require(rowOf(i) == null, s"duplicate affinity row for id ${r.id}")
+      rowOf(i) = r
+    }
+    val rowPtr = new Array[Int](n + 1)
+    var k = 0
+    while (k < n) {
+      rowPtr(k + 1) = rowPtr(k) + (if (rowOf(k) == null) 0 else rowOf(k).js.length)
+      k += 1
+    }
+    val cols = new Array[Int](rowPtr(n))
+    val vals = new Array[Double](rowPtr(n))
+    k = 0
+    while (k < n) {
+      val r = rowOf(k)
+      if (r != null) {
+        var e = 0
+        while (e < r.js.length) {
+          cols(rowPtr(k) + e) = indexOf(r.js(e))
+          vals(rowPtr(k) + e) = r.ps(e)
+          e += 1
+        }
+      }
+      k += 1
+    }
+
+    // id-indexed state, updated in place
     val y = ws0.map(_.y.clone())
     val step = ws0.map(_.lastGrad.clone())
     val gains = ws0.map(_.gains.clone())
-    val rowOf = pRows.map(r => idx.get(r.id))
+    // per-point pass-1 results: attraction (ax, ay), repulsion (rx, ry), sumQ part
+    val ax = new Array[Double](n); val ay = new Array[Double](n)
+    val rx = new Array[Double](n); val ry = new Array[Double](n)
+    val sq = new Array[Double](n)
+    val lossParts = new Array[Double](n)
+    val loss = scala.collection.mutable.Map.empty[Int, Double]
 
     def parRange(bound: Int)(body: Int => Unit): Unit =
       java.util.stream.IntStream.range(0, bound).parallel()
@@ -238,50 +324,47 @@ object Optimizer {
 
     for ((iters, momentum, exaggerate, offset) <- schedule) {
       val factor = if (exaggerate) params.earlyExaggeration else 1.0
+      val pv = if (factor == 1.0) vals else vals.map(_ * factor)
       var it = 1
       while (it <= iters) {
         val lossIter = it + offset
-        val needLoss = lossIter % 10 == 0
         // gradient (ref TsneHelpers.scala:221-318)
         val tree = BhTree.build(y)
-        val rep = new Array[(Double, Double, Double)](n)
-        parRange(n) { k =>
-          rep(k) = tree.repulsiveForce(y(k)(0), y(k)(1), params.theta)
+        parRange(n) { i =>
+          val yi = y(i)
+          val (fx, fy, q) = tree.repulsiveForce(yi(0), yi(1), params.theta)
+          rx(i) = fx; ry(i) = fy; sq(i) = q
+          val (gx, gy) = Gradient.attractiveForceCsr(cols, pv, rowPtr(i), rowPtr(i + 1),
+            yi, y, metric)
+          ax(i) = gx; ay(i) = gy
         }
         var sumQ = 0.0
-        var k = 0
-        while (k < n) { sumQ += rep(k)._3; k += 1 }
+        k = 0
+        while (k < n) { sumQ += sq(k); k += 1 }
         val sumQFixed = sumQ
-        val yOf: Long => Array[Double] = id => y(idx.get(id))
-        val grad = new Array[Array[Double]](n)
-        val lossParts = if (needLoss) new Array[Double](pRows.length) else null
-        parRange(pRows.length) { k =>
-          val row = pRows(k)
-          val i = rowOf(k)
-          val ps = if (factor == 1.0) row.ps else row.ps.map(_ * factor)
-          val (ax, ay) = Gradient.attractiveForce(row.js, ps, y(i), yOf, metric)
-          grad(i) = Array(ax - rep(i)._1 / sumQFixed, ay - rep(i)._2 / sumQFixed)
-          if (needLoss)
-            lossParts(k) = Gradient.lossPart(row.js, ps, y(i), yOf, metric, sumQFixed)
-        }
-        if (needLoss) {
+        if (lossIter % 10 == 0) {
+          parRange(n) { i =>
+            lossParts(i) = Gradient.lossPartCsr(cols, pv, rowPtr(i), rowPtr(i + 1),
+              y(i), y, metric, sumQFixed)
+          }
           var l = 0.0
           k = 0
-          while (k < lossParts.length) { l += lossParts(k); k += 1 }
+          while (k < n) { l += lossParts(k); k += 1 }
           loss.updateWith(lossIter) { case cur => Some(cur.getOrElse(0.0) + l) }
         }
         // update + center (ref TsneHelpers.scala:341-369, :320-329)
-        parRange(n) { k =>
-          val (ny, ns, ng) =
-            Gradient.update(y(k), step(k), gains(k), grad(k), params.minGain,
-              momentum, params.learningRate)
-          y(k) = ny; step(k) = ns; gains(k) = ng
+        parRange(n) { i =>
+          Gradient.updateComponent(y(i), step(i), gains(i), 0, ax(i) - rx(i) / sumQFixed,
+            params.minGain, momentum, params.learningRate)
+          Gradient.updateComponent(y(i), step(i), gains(i), 1, ay(i) - ry(i) / sumQFixed,
+            params.minGain, momentum, params.learningRate)
         }
         var mx = 0.0; var my = 0.0
         k = 0
         while (k < n) { mx += y(k)(0); my += y(k)(1); k += 1 }
         mx /= n; my /= n
-        parRange(n) { k => y(k)(0) -= mx; y(k)(1) -= my }
+        k = 0
+        while (k < n) { y(k)(0) -= mx; y(k)(1) -= my; k += 1 }
         it += 1
       }
     }
@@ -298,8 +381,18 @@ object Optimizer {
     val sc = spark.sparkContext
     val metricName = params.metric
 
-    val pCached = p.persist(StorageLevel.MEMORY_AND_DISK)
+    val pRows = p.persist(StorageLevel.MEMORY_AND_DISK)
     var state: Dataset[WorkingSet] = ws0.localCheckpoint()
+    // A working-set point without a P row gets an empty one, so the forces
+    // pass — and with it sumQ and the update — covers it: zero attraction,
+    // full repulsion, point kept, like every other path. Normally there is
+    // none; the ids are bounded by N, like the state each superstep collects.
+    val missing = state.select(col("id")).join(pRows.select(col("id")), Seq("id"), "left_anti")
+      .as[Long].collect()
+    val pCached =
+      if (missing.isEmpty) pRows
+      else pRows.union(spark.createDataset(
+        missing.toSeq.map(AffinityRow(_, Array.empty[Long], Array.empty[Double]))))
     // The stored state is *uncentered* (post-update); centering is applied
     // when the working set is collected, so each iteration costs no extra
     // pass. The very first working set is used as-is, like the reference.
@@ -401,7 +494,7 @@ object Optimizer {
     var mx = 0.0; var my = 0.0
     fin.foreach { w => mx += w.y(0); my += w.y(1) }
     mx /= fin.length; my /= fin.length
-    pCached.unpersist()
+    pRows.unpersist()
     spark.createDataset(fin.map(w => Point(w.id, Array(w.y(0) - mx, w.y(1) - my))).toSeq)
   }
 

@@ -16,18 +16,14 @@ import org.apache.spark.sql.functions.col
 object Tsne {
 
   /** E2 — the library pipeline (ref `Tsne.scala:105-136`):
-    * kNN triples → pairwise affinities → joint distribution → sparse rows →
-    * init → 3-phase optimize. */
+    * kNN triples → pairwise affinities → symmetric sparse rows (one
+    * shuffle) → |P| + ΣP (one job) → init + 3-phase optimize; see
+    * [[Optimizer.optimizeSymmetric]]. */
   def computeEmbedding(knn: Dataset[Neighbor], params: Optimizer.Params,
-                       lossAcc: Option[MapAccumulator] = None): Dataset[Point] = {
-    val (p, releaseJointCache) =
-      Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
-    val ws0 = Optimizer.initWorkingSet(p, params.nComponents, params.seed)
-    // optimize returns driver-localized results in both paths, so the
-    // upstream joint-distribution cache can be dropped afterwards
-    try Optimizer.optimize(p, ws0, params, lossAcc)
-    finally releaseJointCache()
-  }
+                       lossAcc: Option[MapAccumulator] = None): Dataset[Point] =
+    Optimizer.optimizeSymmetric(
+      Affinities.symmetricRows(Affinities.pairwiseAffinities(knn, params.perplexity)),
+      params, lossAcc)
 
   def main(args: Array[String]): Unit = {
     val builder = SparkSession.builder()
@@ -130,17 +126,16 @@ object Tsne {
       // submits ZERO Spark jobs (round-8 verdict: the previous spelling
       // ran the full optimizer loop and then printed the result's plan —
       // a 300-iteration price for "show me the plan")
-      val (pDs, release) =
-        Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
-      try {
-        val ws0 = Optimizer.initWorkingSet(pDs, params.nComponents, params.seed)
-        val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
-        pw.write(
-          "== kNN / affinity pipeline ==\n" + pDs.queryExecution.toString +
-            "\n== init working set ==\n" + ws0.queryExecution.toString +
-            "\n" + Optimizer.superstepPlanString(pDs, params))
-        pw.close()
-      } finally release()
+      val rows = Affinities.symmetricRows(
+        Affinities.pairwiseAffinities(knn, params.perplexity))
+      val ws0 = Optimizer.initWorkingSet(rows, params.nComponents, params.seed)
+      val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
+      pw.write(
+        "== kNN / affinity pipeline (symmetric rows, before normalization) ==\n" +
+          rows.queryExecution.toString +
+          "\n== init working set (distributed routes) ==\n" + ws0.queryExecution.toString +
+          "\n" + Optimizer.superstepPlanString(rows, params))
+      pw.close()
     } else {
       val result = computeEmbedding(knn, params, Some(lossAcc))
       IO.writeEmbeddingCsv(result, outputPath)

@@ -92,6 +92,34 @@ class PipelineSpec extends AnyFlatSpec with Matchers with Inspectors with SparkT
     forAll(lsh.toSeq) { p => p._2 should not be 3L }
   }
 
+  it should "equal jaccardPairs on a random corpus" in {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(12L)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = (0L until 60L).map(i => (i, text(20)))
+    // plant near-dups: copies with one token appended
+    val dups = (0L until 12L).map(i => (100L + i, base(i.toInt)._2 + " eta"))
+    val d = (base ++ dups).toDF("doc_id", "text")
+    val got = Dedup.minHashNearDups(d, n = 3, theta = 0.5).orderBy("i", "j").collect()
+    // ground truth: the full (unbanded) exact jaccard join
+    got shouldBe Dedup.jaccardPairs(d, n = 3, theta = 0.5).orderBy("i", "j").collect()
+  }
+
+  it should "give the same pairs on an int doc_id as on a long one" in {
+    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")
+    val unrelated = (100 to 140).map(i => s"w$i").mkString(" ")
+    val d = docs((1L, base), (2L, nearDup), (3L, unrelated), (4L, base))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
+    val asLong = pairs(Dedup.minHashNearDups(d, 3, 0.7))
+    val asInt = pairs(Dedup.minHashNearDups(d.withColumn("doc_id", col("doc_id").cast("int")), 3, 0.7))
+    asLong should contain((1L, 2L))
+    asInt shouldBe asLong
+  }
+
   "Dedup.minHashIncremental" should "equal the full-corpus pair set restricted to cross pairs" in {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 20) "CHANGED" else s"tok$i").mkString(" ")

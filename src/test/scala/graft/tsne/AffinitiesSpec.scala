@@ -71,6 +71,25 @@ class AffinitiesSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspec
     results.map(_.dist).sum shouldBe 1.0 +- 1e-12
   }
 
+  "symmetricRows" should "normalize to the dense jointDistribution goldens, row by row" in {
+    val s = spark
+    import s.implicits._
+    val rows = Affinities.symmetricRows(
+      s.createDataset(toNeighbors(Goldens.densePairwiseAffinities)))
+    val (entries, n, total) = Affinities.rowStats(rows)
+    entries shouldBe Goldens.denseJointProbabilities.size.toLong
+    n shouldBe 10L
+    val got = rows.collect().map(Affinities.normalize(_, total)).sortBy(_.id)
+    val want = Goldens.denseJointProbabilities.groupBy(_._1).toSeq.sortBy(_._1)
+    got.map(_.id).toSeq shouldBe want.map(_._1)
+    for ((row, (i, rowEntries)) <- got.zip(want)) {
+      val sorted = rowEntries.sortBy(_._2)
+      row.js.toSeq shouldBe sorted.map(_._2)
+      for ((p, (_, j, expected)) <- row.ps.zip(sorted))
+        withClue(s"p($i,$j): ") { p shouldBe expected +- 1e-12 }
+    }
+  }
+
   "calibrateBeta" should "hit the target perplexity" in {
     // entropy of the returned distribution must equal log(perplexity)
     // within the reference's tolerance regime (ref TsneHelpers.scala:452)

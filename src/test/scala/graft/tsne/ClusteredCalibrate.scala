@@ -34,9 +34,11 @@ object ClusteredCalibrate {
 
       val healthy = recallOf(Tsne.computeEmbedding(knn, params))
 
-      val (p, release) = Affinities.highDimAffinitiesWithRelease(knn, params.perplexity)
-      val pArr = p.collect()
-      val ws0 = Optimizer.initWorkingSet(p, 2, params.seed).collect()
+      val (joint, release) = Affinities.jointDistributionWithRelease(
+        Affinities.pairwiseAffinities(knn, params.perplexity))
+      val pArr = Affinities.toAffinityRows(joint).collect()
+      release()
+      val ws0 = pArr.map(r => Optimizer.initRow(r.id, 2, params.seed))
       def runSchedule(sched: Seq[(Int, Double, Boolean, Int)]): Double = {
         val (pts, _) = Optimizer.optimizeLocalSchedule(
           pArr.map(r => r.copy(js = r.js.clone(), ps = r.ps.clone())),
@@ -51,7 +53,6 @@ object ClusteredCalibrate {
       val noExagg = runSchedule(Seq((20, im, false, 0), (81, fm, false, 20),
         (149, fm, false, 101)))
       val skipP3 = runSchedule(Seq((20, im, true, 0), (81, fm, true, 20)))
-      release()
 
       println(f"CLUSTCALIB n=$n clusters=$clusters dim=$dim perp=$perp " +
         f"healthy=$healthy%.3f skipP2=$skipP2%.3f onlyP1=$onlyP1%.3f " +

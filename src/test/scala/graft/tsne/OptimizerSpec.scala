@@ -164,6 +164,41 @@ class OptimizerSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspect
     for ((id, v) <- viaStateDist; d <- 0 until 2) v(d) shouldBe viaLocal(id)(d) +- 1e-9
   }
 
+  "A working-set point without a P row" should "feel only repulsion and stay on every route" in {
+    val s = spark
+    import s.implicits._
+    // point 99 has no affinity row at all: zero attraction, full
+    // repulsion, kept in the embedding — the same on all three routes
+    val pRows = toRows(Goldens.denseJointProbabilities)
+    val ws0 = Goldens.initialEmbedding.map(p =>
+      WorkingSet(p.id, p.vec.clone(), Array(0.0, 0.0), Array(1.0, 1.0))) :+
+      WorkingSet(99L, Array(0.05, -0.05), Array(0.0, 0.0), Array(1.0, 1.0))
+    def freshWs = ws0.map(w => w.copy(y = w.y.clone(), lastGrad = w.lastGrad.clone(),
+      gains = w.gains.clone())).toArray
+    val params = superstepParams.copy(iterations = 5)
+    val (local, _) = Optimizer.optimizeLocal(pRows, freshWs, params)
+    // no row behaves exactly like an empty row
+    val (withEmptyRow, _) = Optimizer.optimizeLocal(
+      pRows :+ AffinityRow(99L, Array.empty[Long], Array.empty[Double]), freshWs, params)
+    local.map(p => p.id -> p.vec.toSeq).toMap shouldBe
+      withEmptyRow.map(p => p.id -> p.vec.toSeq).toMap
+    val localMap = local.map(p => p.id -> p.vec).toMap
+    localMap.keySet should contain(99L)
+    localMap(99L).toSeq should not be Seq(0.05, -0.05)
+
+    val routes = Seq(
+      "broadcast" -> Optimizer.optimizeDistributed(
+        s.createDataset(pRows.toSeq), s.createDataset(ws0), params, None),
+      "state-distributed" -> Optimizer.optimizeStateDistributed(
+        s.createDataset(pRows.toSeq), s.createDataset(ws0), params, None))
+    for ((route, ds) <- routes) {
+      val out = ds.collect()
+      withClue(s"$route: ") { out.map(_.id).toSet shouldBe localMap.keySet }
+      for (p <- out; d <- 0 until 2)
+        withClue(s"$route y(${p.id})($d): ") { p.vec(d) shouldBe localMap(p.id)(d) +- 1e-9 }
+    }
+  }
+
   "BhTree.buildRdd" should "agree with the driver-side build" in {
     val s = spark
     val rng = new scala.util.Random(13)
