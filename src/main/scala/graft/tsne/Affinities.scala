@@ -71,15 +71,26 @@ object Affinities {
   /** Conditional distribution p_{j|i} from kNN distances
     * (ref `TsneHelpers.scala:162-180`): one shuffle on `i`, then the pure
     * per-group binary search. `flatMapGroups` is the Spark form of the
-    * reference's `groupBy(i).reduceGroup`. */
-  def pairwiseAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[Neighbor] = {
-    val spark = knn.sparkSession
+    * reference's `groupBy(i).reduceGroup`. Each row is calibrated over its
+    * neighbours in `(dist, j)` order, so p does not depend on the order in
+    * which the shuffle delivers them. */
+  def pairwiseAffinities(knn: Dataset[Neighbor], perplexity: Double): Dataset[Neighbor] =
+    nearestAffinities(knn, Int.MaxValue, perplexity)
+
+  /** The kNN merge fused with β calibration: one group-by-i pass over
+    * per-point candidates ([[Knn.candidates]]) keeps the `k` best by
+    * `(dist, j)` ([[Knn.nearest]]) and calibrates β on them, in that order.
+    * Equal, bit for bit, to [[pairwiseAffinities]] over the merged kNN
+    * lists, with one shuffle fewer. */
+  def nearestAffinities(candidates: Dataset[Neighbor], k: Int,
+                        perplexity: Double): Dataset[Neighbor] = {
+    val spark = candidates.sparkSession
     import spark.implicits._
-    knn.groupByKey(_.i)
+    Exchanges.groupedBy[Long, Neighbor](candidates, "i")
       .flatMapGroups { (i, rows) =>
-        val arr = rows.toArray
+        val arr = Knn.nearest(rows, k)
         val p = calibrateBeta(arr.map(_.dist), perplexity)
-        arr.indices.iterator.map(k => Neighbor(i, arr(k).j, p(k)))
+        arr.indices.iterator.map(m => Neighbor(i, arr(m).j, p(m)))
       }
   }
 
@@ -88,7 +99,7 @@ object Affinities {
   /** Symmetrize and assemble sparse rows in ONE shuffle
     * (ref `TsneHelpers.scala:182-196` and the row assembly at
     * `Tsne.scala:119-129`): every conditional p_{j|i} is sent to row i and,
-    * transposed, to row j; a single `groupByKey(i)` then sorts each row by
+    * transposed, to row j; a single group-by-i then sorts each row by
     * j and sums the contributions per column, p_{j|i} + p_{i|j} (at most
     * two for kNN input; ties on j are summed in ascending value order, so
     * the result does not depend on shuffle fetch order). The rows are NOT
@@ -100,8 +111,7 @@ object Affinities {
   def symmetricRows(p: Dataset[Neighbor]): Dataset[AffinityRow] = {
     val spark = p.sparkSession
     import spark.implicits._
-    p.flatMap(n => Iterator(n, Neighbor(n.j, n.i, n.dist)))
-      .groupByKey(_.i)
+    Exchanges.groupedBy[Long, Neighbor](p.flatMap(n => Iterator(n, Neighbor(n.j, n.i, n.dist))), "i")
       .mapGroups { (i, rows) =>
         val sorted = rows.toArray.sortBy(n => (n.j, n.dist))
         val js = new Array[Long](sorted.length)

@@ -20,26 +20,47 @@ object IO {
 
   /** O3 — CSV COO scan, pass-through (precomputed sparse distance matrix,
     * ref `Tsne.scala:155-159`). Schema is declared up front so the CSV
-    * reader never infers (one pass, prunable columns). */
+    * reader never infers (one pass, prunable columns).
+    *
+    * The lines come from `textFile(path, defaultParallelism)` and go
+    * through the same CSV parser: a file scan packs every file under
+    * `spark.sql.files.openCostInBytes` (4 MB) into one split, and the
+    * whole front half downstream then starts from one task (see
+    * [[Exchanges]]). With a declared schema and no header the parser reads
+    * no line while the plan is built, so building it submits no job. */
   def readCoo(spark: SparkSession, path: String): Dataset[CooEntry] = {
     import spark.implicits._
-    spark.read.schema(cooSchema).csv(path).as[CooEntry]
+    val sc = spark.sparkContext
+    val lines = spark.createDataset(sc.textFile(path, sc.defaultParallelism))
+    spark.read.schema(cooSchema).csv(lines).as[CooEntry]
   }
 
   /** O2 — CSV COO scan → dense vectors: group by point id, scatter
     * `(j, v)` pairs into an `Array[Double]` of length `dimension`
-    * (ref `Tsne.scala:138-153`, VectorBuilder per group).
+    * (ref `Tsne.scala:138-153`, VectorBuilder per group), in one shuffle
+    * on `i` ([[Exchanges]]).
     *
-    * Spark-first shape: a single hash-shuffle on `i` with `collect_list`
-    * (partial aggregation applies), then one codegen-friendly assembly map.
-    * Missing dimensions are zero, like VectorBuilder.toDenseVector. */
+    * Missing dimensions are zero and duplicate `(i, j)` entries are summed,
+    * like VectorBuilder.toDenseVector. The summands of a repeated `j` are
+    * added in ascending value order, so the vector does not depend on the
+    * order in which the shuffle delivers them. An index outside
+    * `[0, dimension)` is a clear error naming `--dimension`. */
   def cooToPoints(coo: Dataset[CooEntry], dimension: Int): Dataset[Point] = {
     val spark = coo.sparkSession
     import spark.implicits._
-    coo.groupByKey(_.i)
+    Exchanges.groupedBy[Long, CooEntry](coo, "i")
       .mapGroups { (id, rows) =>
         val vec = new Array[Double](dimension)
-        rows.foreach(e => vec(e.j) = e.v)
+        val seen = new java.util.BitSet(dimension)
+        val repeats = scala.collection.mutable.ArrayBuffer.empty[CooEntry]
+        rows.foreach { e =>
+          require(e.j >= 0 && e.j < dimension,
+            s"point $id has coordinate index ${e.j}, outside [0, --dimension = $dimension)")
+          if (seen.get(e.j)) repeats += e else { seen.set(e.j); vec(e.j) = e.v }
+        }
+        repeats.groupBy(_.j).foreach { case (j, more) =>
+          vec(j) = (vec(j) +: more.map(_.v)).sorted.sum
+        }
         Point(id, vec)
       }
   }

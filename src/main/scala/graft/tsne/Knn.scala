@@ -95,11 +95,8 @@ object Knn {
   def partitionKnn(points: Dataset[Point], k: Int, metric: String, blocks: Int): Dataset[Neighbor] = {
     val spark = points.sparkSession
     import spark.implicits._
-    partitionLocalTopK(points, k, metric, blocks)
-      .groupByKey(_.i)
-      .flatMapGroups[Neighbor] { (_: Long, it: Iterator[Neighbor]) =>
-        it.toArray.sortBy(n => (n.dist, n.j)).take(k).iterator
-      }
+    Exchanges.groupedBy[Long, Neighbor](partitionCandidates(points, k, metric, blocks), "i")
+      .flatMapGroups((_: Long, it: Iterator[Neighbor]) => nearest(it, k).iterator)
   }
 
   /** Ranked form of [[partitionKnn]]: the final per-point merge emits the
@@ -108,17 +105,37 @@ object Knn {
                          blocks: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    partitionLocalTopK(points, k, metric, blocks)
-      .groupByKey(_.i)
+    Exchanges.groupedBy[Long, Neighbor](partitionCandidates(points, k, metric, blocks), "i")
       .flatMapGroups[(Long, Long, Long, Double)] { (_: Long, it: Iterator[Neighbor]) =>
-        it.toArray.sortBy(n => (n.dist, n.j)).take(k).iterator.zipWithIndex
+        nearest(it, k).iterator.zipWithIndex
           .map { case (n, idx) => (n.i, n.j, (idx + 1).toLong, n.dist) }
       }
       .toDF("i", "j", "rn", "dist")
   }
 
-  private def partitionLocalTopK(points: Dataset[Point], k: Int, metric: String,
-                                 blocks: Int): Dataset[Neighbor] = {
+  /** The `k` best of one point's candidates by `(dist, j)` ascending — the
+    * merge every kNN consumer applies, so the kNN stage and the fused
+    * affinity stage ([[Affinities.nearestAffinities]]) keep the same rows
+    * in the same order. */
+  private[tsne] def nearest(candidates: Iterator[Neighbor], k: Int): Array[Neighbor] =
+    candidates.toArray.sortBy(n => (n.dist, n.j)).take(k)
+
+  /** Per-point kNN candidates for [[Affinities.nearestAffinities]], which
+    * keeps the `k` best of them in the same pass that calibrates β: the
+    * block-local top-k lists for `partition` (up to `blocks`·k per point,
+    * no merge shuffle), the exact k lists of [[byMethod]] otherwise. */
+  def candidates(method: String, points: Dataset[Point], k: Int, metric: String,
+                 blocks: Int, knnIterations: Int, seed: Long = 42L,
+                 dimension: Int = -1): Dataset[Neighbor] =
+    if (method == "partition") partitionCandidates(points, k, metric, blocks)
+    else byMethod(method, points, k, metric, blocks, knnIterations, seed, dimension)
+
+  /** The block-pair stage of [[partitionKnn]]: each block pair keeps a
+    * local top-k per left point. Every (i, j) pair meets in exactly one
+    * block pair, so the candidates hold no duplicates. */
+  private def partitionCandidates(points: Dataset[Point], k: Int, metric: String,
+                                  blocks: Int): Dataset[Neighbor] = {
+    require(blocks >= 1, s"--knnBlocks must be at least 1; got $blocks")
     val spark = points.sparkSession
     import spark.implicits._
     val fn = Distances.byName(metric)
@@ -132,8 +149,7 @@ object Knn {
       }
     }
 
-    val localTopK: Dataset[Neighbor] = tagged
-      .groupByKey(_._1)
+    Exchanges.groupedBy[Int, (Int, Boolean, Point)](tagged, "_1")
       .flatMapGroups[Neighbor] { (_: Int, it: Iterator[(Int, Boolean, Point)]) =>
         val lefts = scala.collection.mutable.ArrayBuffer.empty[Point]
         val rights = scala.collection.mutable.ArrayBuffer.empty[Point]
@@ -153,8 +169,6 @@ object Knn {
           local.take(k).iterator
         }
       }
-
-    localTopK
   }
 
   /** O7/O8 — approximate kNN by z-order projections

@@ -53,21 +53,10 @@ object Optimizer {
       // path (optimizeStateDistributed): the working set stays a Dataset,
       // neighbor positions arrive via an edges ⋈ state join, and the update
       // is a pure map — per-superstep driver traffic drops from O(N) state
-      // both ways to a handful of scalars (plus the tree, which is itself
-      // gated by distTreeMinPoints). 5M points ≈ 600 MB of broadcast state
+      // both ways to a handful of scalars plus the N×2 coordinates the
+      // driver builds the tree from. 5M points ≈ 600 MB of broadcast state
       // is where the driver funnel starts to dominate a 1000-executor job.
-      maxBroadcastStateRows: Long = 5000000L,
-      // Executor-side tree build threshold — effectively OFF by default:
-      // measured (TreeBuildBench, local[32]) the treeAggregate build loses
-      // to the driver build at every size that fits (2M pts: 29.9 s vs
-      // 4.7 s), because the broadcast tree must materialize on the driver
-      // regardless, making the final combine Ω(N) driver work *plus*
-      // subtree (de)serialization. The capability stays (OptimizerSpec
-      // forces it and pins 1e-9 agreement) for clusters where driver CPU
-      // is the scarce resource; SCALE.md records the measurement and the
-      // real 100×-scale alternative (distributed state, not a faster
-      // broadcast-tree build).
-      distTreeMinPoints: Int = Int.MaxValue)
+      maxBroadcastStateRows: Long = 5000000L)
 
   /** O13 — init working set: y ~ N(0, σ=1e-4), step = 0⃗, gains = 1⃗
     * (ref `TsneHelpers.scala:198-219`). The reference accepts a
@@ -418,22 +407,8 @@ object Optimizer {
         needCenter = true
         val stateMap = new java.util.HashMap[Long, WorkingSet](arr.length * 2)
         arr.foreach(w => stateMap.put(w.id, w))
-        // Past distTreeMinPoints the tree is built on the executors
-        // (per-partition subtrees + structural merge) instead of on the
-        // driver; see Params.distTreeMinPoints for why that is OFF by
-        // default. Both use the same insertion kernels; the RDD map
-        // re-applies the exact centering subtraction performed on `arr`
-        // above, and the root cell comes from one O(N) driver pass over
-        // the already-collected points — not a second distributed job.
-        val tree =
-          if (arr.length >= params.distTreeMinPoints) {
-            val (ox, oy) = (mx, my)
-            val (rcx, rcy, rhw) = BhTree.rootCellOf(arr.map(_.y))
-            BhTree.buildRdd(state.rdd.map(w => (w.y(0) - ox, w.y(1) - oy)),
-              rcx, rcy, rhw, depth = 2)
-          } else BhTree.build(arr.map(_.y))
         val bcState = sc.broadcast(stateMap)
-        val bcTree = sc.broadcast(tree)
+        val bcTree = sc.broadcast(BhTree.build(arr.map(_.y)))
 
         // 2. one fused pass over P: attractive + Barnes-Hut repulsive +
         // (on loss supersteps) the sumQ-independent loss partials — the
@@ -505,12 +480,9 @@ object Optimizer {
     *
     *   1. centering means via one distributed aggregate (2 doubles to the
     *      driver) and a map — not a driver pass over collected state;
-    *   2. the Barnes-Hut tree, gated like the broadcast path: below
-    *      [[Params.distTreeMinPoints]] only the N×2 embedding coordinates
-    *      are collected (id-sorted, so insertion order — hence
-    *      center-of-mass summation — matches the local kernel), above it
-    *      [[BhTree.buildRdd]] builds executor-side with a distributed
-    *      root-cell pass and zero point collection;
+    *   2. the Barnes-Hut tree, built on the driver from only the N×2
+    *      embedding coordinates (id-sorted, so insertion order — hence
+    *      center-of-mass summation — matches the local kernel);
     *   3. neighbor positions via a join: a static `(i, pos, j, p)` edge
     *      table (exploded from P once, hash-partitioned by `j` so the
     *      exchange is reused every superstep) joins the state on `j`,
@@ -552,7 +524,6 @@ object Optimizer {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var state: Dataset[WorkingSet] = ws0.localCheckpoint()
-    val n = state.count()
     var needCenter = false
 
     for ((iters, momentum, exaggerate, offset) <- phases(params)) {
@@ -574,15 +545,10 @@ object Optimizer {
         needCenter = true
         val st = centered.persist(StorageLevel.MEMORY_AND_DISK)
 
-        // 2. tree — executor-built past distTreeMinPoints (zero collection),
-        // else only the 2 coordinates per point come to the driver
-        val tree =
-          if (n >= params.distTreeMinPoints)
-            BhTree.buildRdd(st.rdd.map(w => (w.y(0), w.y(1))), depth = 2)
-          else
-            BhTree.build(st.select(col("id"), col("y")).as[(Long, Array[Double])]
-              .collect().sortBy(_._1).map(_._2))
-        val bcTree = sc.broadcast(tree)
+        // 2. tree — only the 2 coordinates per point come to the driver
+        val bcTree = sc.broadcast(BhTree.build(
+          st.select(col("id"), col("y")).as[(Long, Array[Double])]
+            .collect().sortBy(_._1).map(_._2)))
 
         // 3. neighbor positions via join, re-assembled in original array order
         val yTbl = st.select(col("id").as("j"),

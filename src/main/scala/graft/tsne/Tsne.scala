@@ -16,13 +16,16 @@ import org.apache.spark.sql.functions.col
 object Tsne {
 
   /** E2 — the library pipeline (ref `Tsne.scala:105-136`):
-    * kNN triples → pairwise affinities → symmetric sparse rows (one
-    * shuffle) → |P| + ΣP (one job) → init + 3-phase optimize; see
-    * [[Optimizer.optimizeSymmetric]]. */
-  def computeEmbedding(knn: Dataset[Neighbor], params: Optimizer.Params,
-                       lossAcc: Option[MapAccumulator] = None): Dataset[Point] =
+    * kNN candidates → the `k` best per point fused with pairwise
+    * affinities (one shuffle) → symmetric sparse rows (one shuffle) →
+    * |P| + ΣP (one job) → init + 3-phase optimize; see
+    * [[Affinities.nearestAffinities]] and [[Optimizer.optimizeSymmetric]].
+    * The default `k` keeps every row, for exact kNN lists. */
+  def computeEmbedding(candidates: Dataset[Neighbor], params: Optimizer.Params,
+                       lossAcc: Option[MapAccumulator] = None,
+                       k: Int = Int.MaxValue): Dataset[Point] =
     Optimizer.optimizeSymmetric(
-      Affinities.symmetricRows(Affinities.pairwiseAffinities(knn, params.perplexity)),
+      Affinities.symmetricRows(Affinities.nearestAffinities(candidates, k, params.perplexity)),
       params, lossAcc)
 
   def main(args: Array[String]): Unit = {
@@ -78,16 +81,19 @@ object Tsne {
       maxLocalPEntries = opt("maxLocalPEntries", "2000000").toLong,
       maxBroadcastStateRows = opt("maxBroadcastStateRows", "5000000").toLong)
 
-    val knn: Dataset[Neighbor] =
+    // kNN candidates and how many of each point's rows P keeps: a
+    // precomputed matrix is used whole; a kNN method hands over per-point
+    // candidates (block-local lists for `partition`), which the affinity
+    // stage merges to the `neighbors` best in the pass that calibrates β
+    val (candidates, keep): (Dataset[Neighbor], Int) =
       if (a.contains("inputDistanceMatrix")) {
         val spark2 = spark
         import spark2.implicits._
-        IO.readCoo(spark, inputPath)
-          .map(e => Neighbor(e.i, e.j.toLong, e.v))
+        (IO.readCoo(spark, inputPath).map(e => Neighbor(e.i, e.j.toLong, e.v)), Int.MaxValue)
       } else {
         val points = IO.readInput(spark, inputPath, dimension)
-        Knn.byMethod(knnMethod, points, neighbors, metric, knnBlocks,
-          knnIterations, params.seed, dimension)
+        (Knn.candidates(knnMethod, points, neighbors, metric, knnBlocks,
+          knnIterations, params.seed, dimension), neighbors)
       }
 
     // validate the recall report arguments BEFORE any Spark work: failing
@@ -101,18 +107,20 @@ object Tsne {
 
     val lossAcc = new MapAccumulator
     spark.sparkContext.register(lossAcc, "loss")
-    // --recallOut reads the kNN graph a second time (as the recall truth);
-    // persist it so that read is a cache hit, not a re-run of the full
-    // kNN lineage (for bruteforce, a second N² pass)
+    // --recallOut reads the kNN candidates a second time (the recall
+    // truth is their top --recallK, which is the top --recallK of the kNN
+    // graph because recallK <= neighbors); persist them so that read is a
+    // cache hit, not a re-run of the full kNN lineage (for bruteforce, a
+    // second N² pass)
     val wantRecall = a.contains("recallOut") && !a.contains("executionPlan")
-    if (wantRecall) knn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (wantRecall) candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      runBody(a, spark, knn, params, lossAcc, outputPath, lossFile)
-    } finally if (wantRecall) knn.unpersist()
+      runBody(a, spark, candidates, keep, params, lossAcc, outputPath, lossFile)
+    } finally if (wantRecall) candidates.unpersist()
   }
 
   private def runBody(a: Map[String, String], spark: SparkSession,
-                      knn: Dataset[Neighbor], params: Optimizer.Params,
+                      candidates: Dataset[Neighbor], keep: Int, params: Optimizer.Params,
                       lossAcc: MapAccumulator, outputPath: String,
                       lossFile: String): Unit = {
     def opt(k: String, d: String) = a.getOrElse(k, d)
@@ -127,7 +135,7 @@ object Tsne {
       // ran the full optimizer loop and then printed the result's plan —
       // a 300-iteration price for "show me the plan")
       val rows = Affinities.symmetricRows(
-        Affinities.pairwiseAffinities(knn, params.perplexity))
+        Affinities.nearestAffinities(candidates, keep, params.perplexity))
       val ws0 = Optimizer.initWorkingSet(rows, params.nComponents, params.seed)
       val pw = new java.io.PrintWriter(new java.io.File("tsne_executionPlan.json"))
       pw.write(
@@ -137,7 +145,7 @@ object Tsne {
           "\n" + Optimizer.superstepPlanString(rows, params))
       pw.close()
     } else {
-      val result = computeEmbedding(knn, params, Some(lossAcc))
+      val result = computeEmbedding(candidates, params, Some(lossAcc), keep)
       IO.writeEmbeddingCsv(result, outputPath)
       val pw = new java.io.PrintWriter(new java.io.File(lossFile))
       pw.write(lossAcc.value.toSeq.sortBy(_._1)
@@ -146,14 +154,14 @@ object Tsne {
       // rebuild extension (no reference counterpart): --recallOut <path>
       // writes the embedding's neighbor-recall@k — the quality gate a real
       // t-SNE user checks on every run (see graft.tsne.Quality). The truth
-      // side re-reads the pipeline's own kNN graph (persisted above), so
-      // no kNN lineage re-runs.
+      // side re-reads the pipeline's own kNN candidates (persisted above),
+      // so no kNN lineage re-runs.
       a.get("recallOut").foreach { path =>
         val k = opt("recallK", "10").toInt
         require(k > 0 && k <= neighbors,
           s"--recallK must be in [1, --neighbors]; got $k with neighbors=$neighbors")
         val truth = Knn.topKPerPointRanked(
-          knn.toDF().select(col("i"), col("j"), col("dist")), k)
+          candidates.toDF().select(col("i"), col("j"), col("dist")), k)
         val row = Quality.neighborRecall(truth, result, k).head()
         val n = row.getLong(row.fieldIndex("n_points"))
         // denominator = actual truth pairs: a sparse graph (distance-matrix

@@ -43,6 +43,29 @@ class AffinitiesSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspec
     forAll(rowSums.toSeq) { _ shouldBe 1.0 +- 1e-9 }
   }
 
+  "nearestAffinities" should "equal pairwiseAffinities over the merged kNN lists, bit for bit" in {
+    val s = spark
+    import s.implicits._
+    val input = IO.readInput(s, fixturePath("dense_input.csv"), 784)
+    val k = 4
+    def rows(p: org.apache.spark.sql.Dataset[Neighbor]): Seq[(Long, Long, Long)] =
+      p.collect().toSeq.map(n => (n.i, n.j, java.lang.Double.doubleToRawLongBits(n.dist)))
+        .sortBy(t => (t._1, t._2))
+    for (blocks <- 1 to 5) withClue(s"partition, blocks=$blocks: ") {
+      val fused = Affinities.nearestAffinities(
+        Knn.candidates("partition", input, k, "sqeuclidean", blocks, 3), k, 2.0)
+      val merged = Affinities.pairwiseAffinities(
+        Knn.partitionKnn(input, k, "sqeuclidean", blocks), 2.0)
+      rows(fused) shouldBe rows(merged)
+    }
+    withClue("bruteforce: ") {
+      val fused = Affinities.nearestAffinities(
+        Knn.candidates("bruteforce", input, k, "sqeuclidean", 1, 3), k, 2.0)
+      rows(fused) shouldBe rows(
+        Affinities.pairwiseAffinities(Knn.bruteForce(input, k, "sqeuclidean"), 2.0))
+    }
+  }
+
   "jointDistribution" should "match the dense Python goldens" in {
     val s = spark
     import s.implicits._

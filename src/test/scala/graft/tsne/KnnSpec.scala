@@ -43,6 +43,43 @@ class KnnSpec extends AnyFlatSpec with Matchers with org.scalatest.Inspectors wi
     }
   }
 
+  it should "reject a block count below 1 naming --knnBlocks" in {
+    val s = spark
+    import s.implicits._
+    val input = s.createDataset(Goldens.knnInput)
+    intercept[IllegalArgumentException] {
+      Knn.partitionKnn(input, 2, "sqeuclidean", 0)
+    }.getMessage should include("--knnBlocks")
+  }
+
+  it should "give each point its N - 1 neighbours with more blocks than points or N <= k" in {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(3L)
+    val n = 5
+    val input = s.createDataset((0 until n).map(i =>
+      Point(i.toLong, Array.fill(3)(rng.nextGaussian()))))
+    for ((k, blocks) <- Seq((8, 2), (2, 7), (8, 7))) withClue(s"k=$k blocks=$blocks: ") {
+      val expectedPerPoint = math.min(k, n - 1)
+      val knn = Knn.partitionKnn(input, k, "sqeuclidean", blocks)
+      val exact = Knn.bruteForce(input, k, "sqeuclidean")
+      asSet(knn.collect().toSeq) shouldBe asSet(exact.collect().toSeq)
+      forAll(knn.collect().groupBy(_.i).values.toSeq) { _.length shouldBe expectedPerPoint }
+      // both affinity routes: the merged lists, and the candidates merged
+      // in the calibration pass; every conditional row sums to 1
+      for (p <- Seq(Affinities.pairwiseAffinities(knn, 2.0),
+                    Affinities.nearestAffinities(
+                      Knn.candidates("partition", input, k, "sqeuclidean", blocks, 3), k, 2.0))) {
+        val rows = p.collect().groupBy(_.i)
+        rows.keySet shouldBe (0L until n.toLong).toSet
+        forAll(rows.values.toSeq) { r =>
+          r.length shouldBe expectedPerPoint
+          r.map(_.dist).sum shouldBe 1.0 +- 1e-12
+        }
+      }
+    }
+  }
+
   "projectKnn" should "produce k rows per point with high recall on the lattice" in {
     val s = spark
     import s.implicits._

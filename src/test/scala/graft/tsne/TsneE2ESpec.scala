@@ -195,11 +195,12 @@ class TsneE2ESpec extends AnyFlatSpec with Matchers with org.scalatest.Inspector
     planFile.delete()
   }
 
-  it should "hand kNN to the local optimizer in at most 9 Spark jobs" in {
-    // one untraced local-route run: read + kNN, the pairwise and the
-    // symmetric-row shuffles, one |P|+ΣP job, one P collect, the CSV write.
-    // The count repeats exactly on this fixture and session, so a job added
-    // anywhere between kNN and the optimizer fails here.
+  it should "hand kNN to the local optimizer in at most 8 Spark jobs" in {
+    // one untraced local-route run: the COO shuffle, the kNN block-pair
+    // shuffle, the kNN merge fused with calibration, the symmetric-row
+    // shuffle, one |P|+ΣP job, one P collect, the CSV write. The count
+    // repeats exactly on this fixture and session, so a job added anywhere
+    // between the scan and the optimizer fails here.
     val tmp = Files.createTempDirectory("tsne-e2e-jobs").toString
     val jobs = jobsDuring(Tsne.run(Array(
       "--input", fixturePath("dense_input.csv"),
@@ -212,35 +213,34 @@ class TsneE2ESpec extends AnyFlatSpec with Matchers with org.scalatest.Inspector
       "--randomState", "42",
       "--loss", tmp + "/loss.txt"), spark))
     info(s"jobs=$jobs")
-    jobs should be <= 9
+    jobs should be <= 8
   }
 
-  /** Spark jobs submitted while `body` runs. Listener events arrive
-    * asynchronously but in order, so once a marked sentinel job's event has
-    * been seen every earlier event has been counted. The sentinel is a
-    * collect(), not a count(): count carries an Exchange, which under AQE
-    * runs as a second job. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("graft.sentinel") != null)
-          sentinelSeen.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try body
-    finally {
-      sc.setLocalProperty("graft.sentinel", "1")
-      try spark.range(1).collect() finally sc.setLocalProperty("graft.sentinel", null)
-      sentinelSeen.await(10, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
+  it should "run every stage before the P collect on all cores" in {
+    // AQE coalesces small shuffles by bytes; the front half's exchanges
+    // are sized by count instead (Exchanges), and the COO scan is split
+    // (IO.readCoo), so no stage from the scan to the P collect runs fewer
+    // tasks than the session has cores. The last job is the CSV write of
+    // the driver-computed embedding.
+    val tmp = Files.createTempDirectory("tsne-e2e-stages").toString
+    val log = StageProfile.during(spark)(Tsne.run(Array(
+      "--input", fixturePath("dense_input.csv"),
+      "--output", tmp + "/emb",
+      "--dimension", "784",
+      "--perplexity", "2",
+      "--neighbors", "9",
+      "--iterations", "30",
+      "--knnMethod", "partition",
+      "--randomState", "42",
+      "--loss", tmp + "/loss.txt"), spark))
+    val cores = spark.sparkContext.defaultParallelism
+    val beforeWrite = log.stages.filter(_.job != log.stages.map(_.job).max)
+    info(log.stages.map(s => s"${s.job}:${s.tasks}").mkString("job:tasks ", " ", ""))
+    beforeWrite.size should be >= 5
+    forAll(beforeWrite) { s => s.tasks should be >= cores }
   }
+
+  private def jobsDuring(body: => Unit): Int = StageProfile.during(spark)(body).jobs
 
   "parseArgs" should "parse flags and key-value pairs" in {
     Tsne.parseArgs(Array("--a", "1", "--flag", "--b", "x")) shouldBe
